@@ -140,6 +140,11 @@ def run_at(n_executors: int, n_events: int, n_batches: int, pkg: str) -> dict:
         # a 40%-idle second wave, measured)
         "--conf", "spark.sql.files.maxPartitionBytes=16777216",
         "--conf", "spark.sql.adaptive.enabled=true",
+        # the engine sizes its bucket writers from defaultParallelism, which
+        # counts only executors registered so far; pin it to the slot count.
+        # Manifest-listed reads stat files on the driver (session.py).
+        "--conf", f"spark.default.parallelism={cores}",
+        "--conf", "spark.sql.sources.parallelPartitionDiscovery.threshold=100000",
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.driver.memory=4g",
         "--conf", "spark.ui.enabled=false",

@@ -56,6 +56,7 @@ single change-stream cursor.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import time
@@ -71,6 +72,9 @@ from kafka_mongo_watcher_spark.operators.dedup import (
     lww_dedup_salted,
     lww_dedup_semijoin,
 )
+
+_log = logging.getLogger(__name__)
+
 
 def _conf(spark: SparkSession, key: str, default: str) -> str:
     """Engine conf lookup: the bare `kmw.X` first — a bare key can only get
@@ -1395,20 +1399,15 @@ class LakeTable:
         return w
 
     def _writer_count(self, n_targets: int | None = None) -> int:
-        """Write-stage task count: min(buckets to write, max(32, cluster
-        parallelism)) — scales with executors instead of r2's hard 32 cap,
-        while never planning more tasks than distinct buckets (each bucket
-        hashes to exactly one writer). `kmw.mor.maxWriters` overrides the
-        cluster-derived ceiling."""
-        ceiling = int(
-            _conf(
-                self.spark,
-                "kmw.mor.maxWriters",
-                str(max(32, self.spark.sparkContext.defaultParallelism)),
-            )
-        )
+        """Task count of every bucket-keyed write or resolve stage:
+        min(buckets to write, cluster cores). Each bucket hashes to exactly
+        one task, so more tasks than buckets are empty, and more tasks than
+        cores run in waves whose per-task overhead outweighs a small
+        bucket's write (4 cores: a 4-task write of the same rows took 0.88 s
+        against 1.42 s for 32 tasks). On a cluster the ceiling grows with
+        the executors."""
         buckets = self.n_buckets if n_targets is None else n_targets
-        return max(1, min(ceiling, buckets))
+        return max(1, min(self.spark.sparkContext.defaultParallelism, buckets))
 
     def _fold_patches(self, batch: DataFrame) -> tuple[DataFrame, list[str]]:
         """Shared prefix of both patch-apply modes: fingerprint (null-gated
@@ -1718,14 +1717,9 @@ class LakeTable:
         else:
             winners = lww_dedup(batch)
         if "content_raw" in winners.columns and "content_sha256" not in winners.columns:
-            if _conf(self.spark, "kmw.merge.fingerprintWinners", "true") == "true":
-                from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
+            from kafka_mongo_watcher_spark.operators.envelope import fingerprint_content
 
-                winners = fingerprint_content(winners)
-            else:  # keep raw content; sha256 column left null (bench/diagnostics)
-                winners = winners.withColumnRenamed("content_raw", "content").withColumn(
-                    "content_sha256", F.lit(None).cast("string")
-                )
+            winners = fingerprint_content(winners)
 
         # -- schema evolution: reconcile batch payload columns vs manifest --
         internal_names = {n for n, _ in INTERNAL_FIELDS} | {"op", "lineage"}
@@ -1819,11 +1813,8 @@ class LakeTable:
             obs = Observation()
             # Buckets hashed into writer partitions: every bucket maps to
             # exactly one task ⇒ exactly one delta file per touched bucket
-            # per batch. Writer count scales with the CLUSTER (bounded by
-            # n_buckets — more writers than buckets is just empty tasks),
-            # not a hard 32: r2's fixed cap throttled every merge's write
-            # stage to 32 tasks on any larger cluster (VERDICT r2 §wrong 3).
-            # Override with kmw.mor.maxWriters.
+            # per batch. Writer count = min(n_buckets, cores) (see
+            # _writer_count).
             n_writers = self._writer_count()
             to_write = winners.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
                 n_writers, "_bucket"
@@ -2154,7 +2145,7 @@ class LakeTable:
             ).withColumn("_bucket", self._bucket_expr())
             if purge_tombstones:
                 masked_part = masked_part.filter(~F.col("is_deleted"))
-            masked_part = masked_part.repartition(max(len(m_ids), 1), "_bucket")
+            masked_part = masked_part.repartition(self._writer_count(len(m_ids)), "_bucket")
             if not ids:
                 return masked_part
         ids_s = [str(b) for b in ids]
@@ -2170,7 +2161,7 @@ class LakeTable:
             F.col("offset").desc(),
         )
         out = (
-            df.repartition(max(len(ids), 1), "_bucket")
+            df.repartition(self._writer_count(len(ids)), "_bucket")
             .withColumn("_prev_repo", F.lag("repo").over(w))
             .withColumn("_prev_path", F.lag("path").over(w))
             .filter(
@@ -2202,15 +2193,22 @@ class LakeTable:
         Works for any orderable column type (numeric + string); all-NULL
         ranks are 0.
 
-        The Z-address accumulates in BIGINT and `bits` is clamped so
-        `bits * len(cols) <= 63` (ADVICE r4: int accumulation overflowed
-        the sign bit at 4+ columns × 8 bits, silently scrambling the
-        clustering order — correctness was unaffected, bounds are always
-        recomputed, but the layout degraded to near-random)."""
+        The Z-address accumulates in BIGINT and `bits` is clamped, with a
+        logged warning, so `bits * len(cols) <= 63` (ADVICE r4: int
+        accumulation overflowed the sign bit at 4+ columns × 8 bits,
+        silently scrambling the clustering order — correctness was
+        unaffected, bounds are always recomputed, but the layout degraded
+        to near-random)."""
         k = len(cols)
+        if k == 0:
+            raise ValueError("zorder needs at least one column")
         if k > 63:
             raise ValueError(f"zorder supports at most 63 columns, got {k}")
-        bits = min(bits, 63 // k)
+        if bits * k > 63:
+            _log.warning(
+                "zorder over %d columns: %d bits per column clamped to %d", k, bits, 63 // k
+            )
+            bits = 63 // k
         n_marks = (1 << bits) - 1
         rank_exprs = []
         for c in cols:
@@ -2397,10 +2395,7 @@ class LakeTable:
             F.col("offset").desc(),
         )
         out = (
-            df.repartition(
-                max(1, min(new_n_buckets, self._writer_count(new_n_buckets))),
-                "_bucket",
-            )
+            df.repartition(self._writer_count(new_n_buckets), "_bucket")
             .withColumn("_prev_repo", F.lag("repo").over(w))
             .withColumn("_prev_path", F.lag("path").over(w))
             .filter(

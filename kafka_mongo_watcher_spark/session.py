@@ -21,6 +21,15 @@ had these, so the driver bench ran 15x slower than the scaling harness):
   package being importable from a real filesystem path (ADVICE r1: on
   --py-files-only clusters the override must fall back to the stock
   daemon, not kill every Python task).
+- `spark.sql.sources.parallelPartitionDiscovery.threshold=100000`: a
+  `LakeTable` read passes the exact data files its manifest lists, and
+  above the default threshold (32 paths) Spark stats them in a distributed
+  "Listing leaf files" job — one task per path, seconds of task fan-out for
+  a compaction over a few hundred small files. The table commits with
+  `os.link`/`os.listdir`, so every table path is on a POSIX filesystem the
+  driver stats in microseconds; listing there serially costs less than
+  scheduling one task. Reads of object-store paths are not a use case of
+  this engine.
 """
 
 from __future__ import annotations
@@ -30,14 +39,15 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _local_cluster_mem_mb(master: str) -> int | None:
-    """memMB from local-cluster[n,cores,memMB], else None."""
+def _local_cluster_spec(master: str) -> tuple[int, int, int] | None:
+    """(n, cores, memMB) from local-cluster[n,cores,memMB], else None."""
     if not master.startswith("local-cluster["):
         return None
     try:
-        return int(master.rstrip("]").split(",")[2])
-    except (IndexError, ValueError):
+        n, cores, mem_mb = (int(x) for x in master[len("local-cluster[") : -1].split(","))
+    except ValueError:
         return None
+    return n, cores, mem_mb
 
 
 def _daemon_preload_available() -> bool:
@@ -83,6 +93,9 @@ def spark_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # manifest-listed files are stat'ed on the driver, never in a job
+        # (see module docstring)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
         # pre-touch the driver heap at launch (see module docstring); only
@@ -126,13 +139,17 @@ def spark_session(
         builder = builder.config("spark.local.dir", shm)
     except OSError:
         pass
-    mem_mb = _local_cluster_mem_mb(master)
-    if mem_mb is not None:
+    spec = _local_cluster_spec(master)
+    if spec is not None:
+        n_exec, exec_cores, mem_mb = spec
         # size executors to the worker spec and pre-touch their full heap
         heap = max(mem_mb - 512, 1024)
-        builder = builder.config("spark.executor.memory", f"{heap}m").config(
-            "spark.executor.extraJavaOptions",
-            f"-Xms{heap}m -XX:+AlwaysPreTouch",
+        builder = (
+            builder.config("spark.executor.memory", f"{heap}m")
+            .config("spark.executor.extraJavaOptions", f"-Xms{heap}m -XX:+AlwaysPreTouch")
+            # defaultParallelism counts only REGISTERED executor cores (2
+            # before the first registers); writer counts are sized from it
+            .config("spark.default.parallelism", str(n_exec * exec_cores))
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

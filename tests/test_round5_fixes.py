@@ -133,6 +133,26 @@ def test_zorder_bits_clamped_to_63(spark, tmp_path):
         t._zorder_expr(df.select(F.col("c0")), [f"x{i}" for i in range(64)])
 
 
+def test_zorder_empty_columns_raise_value_error(spark, tmp_path):
+    t = _zorder_table(spark, tmp_path)
+    with pytest.raises(ValueError, match="at least one column"):
+        t._zorder_expr(spark.range(4), [])
+
+
+def test_zorder_bits_clamp_logs_warning(spark, tmp_path, caplog):
+    t = _zorder_table(spark, tmp_path)
+    cols = [f"c{i}" for i in range(10)]
+    df = spark.range(64).select(
+        *[(F.col("id") % (3 + i)).alias(c) for i, c in enumerate(cols)]
+    )
+    with caplog.at_level("WARNING", logger="kafka_mongo_watcher_spark.plans.lake"):
+        t._zorder_expr(df, cols, bits=6)  # 60 bits: no clamp
+        assert not caplog.records
+        t._zorder_expr(df, cols, bits=7)  # 70 bits: clamps to 63 // 10 = 6
+    assert len(caplog.records) == 1
+    assert "clamped to 6" in caplog.records[0].getMessage()
+
+
 def test_zorder_clustering_still_effective(spark, tmp_path):
     """The long-typed address must still interleave: sorting by Z on two
     correlated dims clusters BOTH (per-half ranges shrink vs random)."""
