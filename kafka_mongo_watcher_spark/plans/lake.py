@@ -1813,8 +1813,7 @@ class LakeTable:
             obs = Observation()
             # Buckets hashed into writer partitions: every bucket maps to
             # exactly one task ⇒ exactly one delta file per touched bucket
-            # per batch. Writer count = min(n_buckets, cores) (see
-            # _writer_count).
+            # per batch.
             n_writers = self._writer_count()
             to_write = winners.observe(obs, F.count(F.lit(1)).alias("rows")).repartition(
                 n_writers, "_bucket"
